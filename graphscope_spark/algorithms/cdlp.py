@@ -89,7 +89,7 @@ def cdlp(
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        meta={"algorithm": "cdlp", "max_rounds": max_rounds},
+        meta={"algorithm": "cdlp"},
     )
     sym.unpersist()
     res.state = res.state.select("vid", "label")

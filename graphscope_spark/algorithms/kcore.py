@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import truncate_plan, truncate_plan_lazy
+from graphscope_spark.bsp import run_bsp, truncate_plan_lazy
 from graphscope_spark.graph import LinkGraph
 
 
@@ -120,10 +120,10 @@ def coreness(
     pending RAISES (mirroring ``coloring``) — round 4 found the previous
     silent return handing out unconverged cores at bench scale.
 
-    ``fused_rounds=k`` runs k rounds per Spark job (lazy plan-cut chain,
-    changed-count checked once per block) — the H-operator is monotone
-    non-increasing, so rounds past convergence are no-ops and the block
-    check is exact.
+    The rounds run on ``bsp.run_bsp``: ``fused_rounds=k`` runs k rounds
+    per Spark job (changed-count checked once per block) — the H-operator
+    is monotone non-increasing, so rounds past convergence are no-ops and
+    the block check is exact.
 
     Below ``max_driver_edges`` the exact bucket peel runs driver-side in
     one pass (the bounded-driver contract of min_vertex_cover/dfs_preorder)
@@ -131,8 +131,6 @@ def coreness(
     for a graph that fits in memory; pass ``max_driver_edges=0`` to force
     the distributed path (the gate does, keeping it oracle-checked)."""
     from pyspark.sql.window import Window
-
-    from graphscope_spark.bsp import release_truncated
 
     und = graph.undirected_edges(drop_self_loops=True).persist()
     m = und.count()
@@ -146,7 +144,7 @@ def coreness(
     deg = und.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").cast("long").alias("core")
     )
-    cores = (
+    cores0 = (
         graph.vertices.select("vid")
         .join(deg, "vid", "left")
         .select(
@@ -161,9 +159,8 @@ def coreness(
         .orderBy(F.col("core").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    converged = False
-    spent: list[DataFrame] = []
-    for rnd in range(1, max_rounds + 1):
+
+    def superstep(cores: DataFrame, rnd: int) -> DataFrame:
         frontier = cores.where("chg").select(F.col("vid").alias("src"))
         affected = (
             und.join(frontier, "src").select(F.col("dst").alias("vid")).distinct()
@@ -181,8 +178,7 @@ def coreness(
             .agg(F.max("m").alias("h"))
         )
         new_core = F.least(F.col("core"), F.coalesce(F.col("h"), F.col("core")))
-        spent.append(cores)
-        cores = (
+        return (
             cores.select("vid", "core")
             .join(h, "vid", "left")
             .select(
@@ -190,30 +186,21 @@ def coreness(
                 new_core.alias("core"),
                 (new_core < F.col("core")).alias("chg"),
             )
-            .transform(truncate_plan_lazy)
         )
-        if rnd % max(1, fused_rounds) == 0 or rnd == max_rounds:
-            done = cores.where("chg").count() == 0
-            # the count materialized `cores`; every older checkpoint's
-            # blocks (and persistentRdds metadata) are now releasable —
-            # a 600-round loop otherwise OOMs the driver (bsp.py:release)
-            for st in spent:
-                release_truncated(st)
-            spent.clear()
-            # cyclic Python refs delay py4j detach of the round's JVM
-            # objects (plans, RDD handles) until a gc cycle runs — without
-            # this, hundreds of rounds of pinned plan trees OOM the driver
-            import gc
 
-            gc.collect()
-            if done:
-                converged = True
-                break
+    res = run_bsp(
+        cores0,
+        superstep,
+        max_rounds=max_rounds,
+        scalar_fn=lambda cores: cores.where("chg").count(),
+        converged_fn=lambda changed, rnd: changed == 0,
+        fused_rounds=fused_rounds,
+    )
     und.unpersist()
-    if not converged:
+    if not res.converged:
         raise RuntimeError(
             f"coreness: h-index iteration still changing after {max_rounds} "
             "rounds — raise max_rounds (rounds scale with the graph's "
             "correction-wave depth; see docstring)"
         )
-    return cores.select("vid", "core")
+    return res.state.select("vid", "core")

@@ -440,7 +440,7 @@ def powerlaw_alpha(graph: LinkGraph, k_min: int = 2) -> float:
 def topological_generations(
     graph: LinkGraph,
     max_rounds: int | None = None,
-    block_rounds: int = 8,
+    fused_rounds: int = 8,
     local_cutoff: int = 100_000,
     local_edge_cutoff: int = 2_000_000,
 ) -> DataFrame:
@@ -454,11 +454,12 @@ def topological_generations(
       in-degree-0 layer: freshly settled vertices send ``gen+1`` to their
       out-neighbors in ONE shuffle (max + count aggregate); receivers
       accumulate the max and decrement a pending-in-degree counter, and
-      settle when it hits zero. ``block_rounds`` supersteps fuse into one
-      Spark job. Unlike plain max-relax, the pending counter makes the
-      NOT-YET-FINAL set explicit and monotonically shrinking — which
-      both detects cycles immediately (no fresh settlers while vertices
-      remain pending) and enables the second regime.
+      settle when it hits zero. The supersteps run on ``bsp.run_bsp``,
+      ``fused_rounds`` of them per Spark job. Unlike plain max-relax, the
+      pending counter makes the NOT-YET-FINAL set explicit and
+      monotonically shrinking — which both detects cycles immediately (no
+      fresh settlers while vertices remain pending) and enables the second
+      regime.
     * **Guarded local finish** — real web DAGs are deep through sparse
       chain tails: after the wide layers settle, thousands of residual
       rounds would each move a handful of vertices at full
@@ -476,7 +477,7 @@ def topological_generations(
     pairs on a chain — which cannot exist at 100 TB. Reference surface:
     nx forward test_dag (topological_sort / dag_longest_path family — any
     topological order sorted by (gen, vid) is deterministic)."""
-    from graphscope_spark.bsp import release_state, truncate_plan, truncate_plan_lazy
+    from graphscope_spark.bsp import run_bsp, truncate_plan
 
     if graph.edges.where(F.col("src") == F.col("dst")).limit(1).count() > 0:
         raise ValueError(
@@ -506,7 +507,7 @@ def topological_generations(
         )
     )
 
-    def superstep(st: DataFrame) -> DataFrame:
+    def superstep(st: DataFrame, rnd: int) -> DataFrame:
         frontier = st.where("fresh").select(F.col("vid").alias("src"), "gen")
         msgs = (
             frontier.join(edges, "src")
@@ -530,75 +531,73 @@ def topological_generations(
             ((st["pend"] > 0) & (pend2 == 0)).alias("fresh"),
         )
 
-    rounds = 0
-    prev = state
-    try:
-        while True:
-            for j in range(1, block_rounds + 1):
-                state = superstep(state)
-                if j % 4 == 0 and j < block_rounds:
-                    state = truncate_plan_lazy(state)
-            state = truncate_plan(state, eager=False)
-            row = state.agg(
-                F.sum(F.col("fresh").cast("long")).alias("fr"),
-                F.sum((F.col("pend") > 0).cast("long")).alias("un"),
-            ).collect()[0]
-            release_state(prev)
-            prev = state
-            rounds += block_rounds
-            fresh, unsettled = int(row["fr"] or 0), int(row["un"] or 0)
-            if unsettled == 0:
-                return state.select("vid", "gen")
-            if fresh == 0:
-                raise ValueError(
-                    "topological_generations: no vertex can settle while "
-                    f"{unsettled} remain pending — the input graph has a cycle"
-                )
-            if unsettled <= local_cutoff:
-                # the block's final settlers are fresh but have NOT sent
-                # yet — deliver their boundary messages into the residual
-                # gens before handing off, or the local pass would start
-                # from underestimates
-                bmsgs = (
-                    state.where("fresh")
-                    .select(F.col("vid").alias("src"), "gen")
-                    .join(edges, "src")
-                    .groupBy("dst")
-                    .agg((F.max("gen") + 1).alias("mgen"))
-                )
-                pending = state.where(F.col("pend") > 0)
-                resid = pending.join(
-                    bmsgs, pending["vid"] == bmsgs["dst"], "left"
-                ).select(
-                    pending["vid"],
-                    F.greatest(
-                        pending["gen"],
-                        F.coalesce(F.col("mgen"), pending["gen"]),
-                    ).alias("gen"),
-                )
-                rsrc = resid.select(F.col("vid").alias("src"))
-                rdst = resid.select(F.col("vid").alias("dst"))
-                re = (
-                    edges.join(rsrc, "src", "semi")
-                    .join(rdst, "dst", "semi")
-                    .select("src", "dst")
-                    .persist()
-                )
-                if re.count() <= local_edge_cutoff:
-                    vrows = resid.collect()
-                    erows = re.collect()
-                    re.unpersist()
-                    done = state.where(F.col("pend") == 0).select("vid", "gen")
-                    local = _kahn_local(
-                        state.sparkSession, vrows, erows
-                    )
-                    return done.unionByName(local)
+    # guarded local finish: set by scalar_fn once the residual fits
+    tail = {}
+
+    def scalar_fn(st: DataFrame) -> int:
+        row = st.agg(
+            F.sum(F.col("fresh").cast("long")).alias("fr"),
+            F.sum((F.col("pend") > 0).cast("long")).alias("un"),
+        ).collect()[0]
+        fresh, unsettled = int(row["fr"] or 0), int(row["un"] or 0)
+        if unsettled and not fresh:
+            raise ValueError(
+                "topological_generations: no vertex can settle while "
+                f"{unsettled} remain pending — the input graph has a cycle"
+            )
+        if 0 < unsettled <= local_cutoff:
+            # the block's final settlers are fresh but have NOT sent yet —
+            # deliver their boundary messages into the residual gens before
+            # handing off, or the local pass would start from underestimates
+            bmsgs = (
+                st.where("fresh")
+                .select(F.col("vid").alias("src"), "gen")
+                .join(edges, "src")
+                .groupBy("dst")
+                .agg((F.max("gen") + 1).alias("mgen"))
+            )
+            pending = st.where(F.col("pend") > 0)
+            resid = pending.join(
+                bmsgs, pending["vid"] == bmsgs["dst"], "left"
+            ).select(
+                pending["vid"],
+                F.greatest(
+                    pending["gen"], F.coalesce(F.col("mgen"), pending["gen"])
+                ).alias("gen"),
+            )
+            re = (
+                edges.join(resid.select(F.col("vid").alias("src")), "src", "semi")
+                .join(resid.select(F.col("vid").alias("dst")), "dst", "semi")
+                .select("src", "dst")
+                .persist()
+            )
+            if re.count() <= local_edge_cutoff:
+                tail.update(resid=resid, edges=re)
+            else:
                 re.unpersist()  # residual too dense — keep iterating
-            if rounds >= limit:
-                raise ValueError(
-                    "topological_generations: levels still growing after "
-                    f"{limit} rounds — the input graph has a cycle"
-                )
+        return unsettled
+
+    try:
+        res = run_bsp(
+            state,
+            superstep,
+            max_rounds=limit,
+            scalar_fn=scalar_fn,
+            converged_fn=lambda unsettled, rnd: unsettled == 0 or "edges" in tail,
+            fused_rounds=fused_rounds,
+        )
+        if "edges" in tail:
+            vrows = tail["resid"].collect()
+            erows = tail["edges"].collect()
+            tail["edges"].unpersist()
+            done = res.state.where(F.col("pend") == 0).select("vid", "gen")
+            return done.unionByName(_kahn_local(res.state.sparkSession, vrows, erows))
+        if not res.converged:
+            raise ValueError(
+                "topological_generations: levels still growing after "
+                f"{limit} rounds — the input graph has a cycle"
+            )
+        return res.state.select("vid", "gen")
     finally:
         edges.unpersist()
 

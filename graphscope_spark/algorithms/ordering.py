@@ -18,17 +18,16 @@ coreness, rank vertices by iterated parallel peel rounds:
 Scale shape (rewritten round 4, matching the reference's incremental
 decrement): ONE state DataFrame carries the residual degree AND the
 rank/layer as columns — rank IS NULL means "still in the residual graph".
-Each round is exactly ONE Spark job: the removed frontier's edges decrement
+The rounds run on ``bsp.run_bsp``: the removed frontier's edges decrement
 their surviving endpoints' residual degrees (`und ⋈ frontier`, work ∝
 frontier out-edges, so the TOTAL join work across all rounds is O(m) —
-not O(m · rounds) like the recompute-from-remaining formulation), the new
-state is built lazily (`truncate_plan_lazy`), and the single action that
-materializes it is the remaining-vertex count that doubles as the stopping
-condition — the `coreness` (`kcore.py:60`) / `run_bsp` (`bsp.py:231`)
-pattern. No per-round union accumulator, no growing output re-checkpoint:
-ranks accumulate in place in the fixed-size state. (The previous
-formulation ran ~4 driver jobs per round plus an O(rounds)-deep union —
-a driver-bound scale-killer at web-graph peel depths.)
+not O(m · rounds) like the recompute-from-remaining formulation), and the
+block's single action is the remaining-vertex count that doubles as the
+stopping condition (``_run_peel``). No per-round union accumulator, no
+growing output re-checkpoint: ranks accumulate in place in the fixed-size
+state. (The previous formulation ran ~4 driver jobs per round plus an
+O(rounds)-deep union — a driver-bound scale-killer at web-graph peel
+depths.)
 
 Progress per round is guaranteed (an empty removal set would exhibit a
 (c*+1)-core inside the c*-shell, contradicting coreness), so rounds ≤
@@ -37,13 +36,12 @@ peel-cascade depth, the same bound the `coreness` h-index iteration carries.
 
 from __future__ import annotations
 
-import gc
 from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import release_truncated, truncate_plan_lazy
+from graphscope_spark.bsp import run_bsp, truncate_plan_lazy
 from graphscope_spark.graph import LinkGraph
 
 
@@ -77,44 +75,63 @@ def _simulate_peel(population, removable, on_remove):
     return out
 
 
-def _peel_tail_finish(
-    state, out_col, collect_cols, edges_tbl, rnd, make_sim, local_edge_cutoff
+def _run_peel(
+    state0, superstep, out_col, collect_cols, edges_tbl, make_sim,
+    max_rounds, fused_rounds, local_cutoff, local_edge_cutoff,
 ):
-    """Shared guarded tail finish for the peel loops: when the residual
-    (``out_col`` IS NULL) subgraph's internal edge count (checked, never
-    assumed) fits under ``local_edge_cutoff``, finish the cascade in one
-    driver-side ``_simulate_peel`` pass with rounds offset by the ``rnd``
-    distributed rounds already completed. ``make_sim(rows, adj)`` returns
-    the (population, removable, on_remove) triple for the simulation.
-    Returns the completed (vid, out_col) frame, or None when the residual
-    is still too dense (caller keeps peeling distributed)."""
-    resid = state.where(F.col(out_col).isNull()).select("vid", *collect_cols)
-    rv = resid.select(F.col("vid").alias("src"))
-    re_ = (
-        edges_tbl.join(rv, "src", "semi")
-        .join(resid.select(F.col("vid").alias("dst")), "dst", "semi")
-        .select("src", "dst")
-        .persist()
+    """Run a distributed peel (``superstep`` stamps ``out_col`` with the
+    round a vertex leaves) on ``run_bsp``, with the shared guarded tail
+    finish: each block's stopping count is the residual (``out_col`` IS
+    NULL) vertex count; once it drops under ``local_cutoff`` AND the
+    residual-internal edge count (checked, never assumed) is under
+    ``local_edge_cutoff``, the loop stops and the remaining cascade — a
+    bounded subproblem with every applied decrement already in the state
+    (rounds complete at block end, no in-flight messages) — finishes in one
+    driver-side ``_simulate_peel`` pass with rounds offset by the
+    distributed rounds completed. ``make_sim(rows, adj)`` returns the
+    (population, removable, on_remove) triple for the simulation. Returns
+    the (vid, out_col) frame."""
+    tail = {}
+
+    def scalar_fn(state):
+        resid = state.where(F.col(out_col).isNull())
+        remaining = resid.count()
+        if 0 < remaining <= local_cutoff:
+            re_ = (
+                edges_tbl.join(resid.select(F.col("vid").alias("src")), "src", "semi")
+                .join(resid.select(F.col("vid").alias("dst")), "dst", "semi")
+                .select("src", "dst")
+                .persist()
+            )
+            if re_.count() <= local_edge_cutoff:
+                tail["edges"] = re_
+            else:
+                re_.unpersist()  # residual too dense — keep peeling
+        return remaining
+
+    res = run_bsp(
+        state0,
+        superstep,
+        max_rounds=max_rounds,
+        scalar_fn=scalar_fn,
+        converged_fn=lambda remaining, rnd: remaining == 0 or "edges" in tail,
+        fused_rounds=fused_rounds,
     )
-    if re_.count() > local_edge_cutoff:
-        re_.unpersist()  # residual too dense — keep peeling
-        return None
+    state = res.state
+    done = state.where(F.col(out_col).isNotNull()).select("vid", out_col)
+    if "edges" not in tail:
+        return done
     adj = defaultdict(list)
-    for r in re_.collect():
+    for r in tail["edges"].collect():
         adj[r["src"]].append(r["dst"])
-    re_.unpersist()
-    rows = resid.collect()
-    population, removable, on_remove = make_sim(rows, adj)
-    out = _simulate_peel(population, removable, on_remove)
+    tail["edges"].unpersist()
+    rows = state.where(F.col(out_col).isNull()).select("vid", *collect_cols).collect()
+    out = _simulate_peel(*make_sim(rows, adj))
     local = state.sparkSession.createDataFrame(
-        sorted((int(v), int(r) + rnd) for v, r in out.items()),
+        sorted((int(v), int(r) + res.supersteps) for v, r in out.items()),
         f"vid long, {out_col} long",
     )
-    return (
-        state.where(F.col(out_col).isNotNull())
-        .select("vid", out_col)
-        .unionByName(local)
-    )
+    return done.unionByName(local)
 
 
 def degeneracy_order(
@@ -142,15 +159,13 @@ def degeneracy_order(
     forces that path, as the gate does); only the barrier-bound tail is
     escaped, and above the guards the loop just keeps iterating.
 
-    ``fused_rounds=k`` stacks k peel rounds into ONE Spark job: inner
-    rounds only *construct* the next lazily-checkpointed state (plan cut,
-    RDD lineage shared — no tree blowup), and the remaining-vertex stopping
-    count runs once per block. Peel semantics are unaffected — a round past
-    completion has an empty frontier and decrements nothing, and ranks are
-    stamped with the true inner round number. Peel depth is the inherent
-    round count of the parallel peel, so at web-graph depths (hundreds of
-    cascades) this divides driver round-trips by k, the same lever as
-    pagerank's ``fused_rounds`` (pagerank.py:22).
+    ``fused_rounds=k`` stacks k peel rounds into ONE Spark job
+    (``run_bsp``); the remaining-vertex stopping count runs once per block.
+    Peel semantics are unaffected — a round past completion has an empty
+    frontier and decrements nothing, and ranks are stamped with the true
+    round number. Peel depth is the inherent round count of the parallel
+    peel, so at web-graph depths (hundreds of cascades) this divides driver
+    round-trips by k.
 
     Peel depth is Θ(cascade length) — measured ~600 rounds at sf0.1 once
     the degeneracy is computed CORRECTLY (dg=4; round 4 found the earlier
@@ -163,16 +178,19 @@ def degeneracy_order(
     und = graph.undirected_edges(drop_self_loops=True).persist()
     m = und.count()
     dg = coreness(graph).agg(F.max("core")).collect()[0][0] or 0
-    if m <= max_driver_edges:
-        adj, deg = _collect_adj(und, graph.vertices.select("vid"))
-        und.unpersist()
 
+    def peel_at_dg(deg, adj):
         def on_remove(v):
             for w in adj.get(v, ()):
                 deg[w] -= 1
             return set(adj.get(v, ()))
 
-        ranks = _simulate_peel(deg, lambda v: deg[v] <= dg, on_remove)
+        return deg, (lambda v: deg[v] <= dg), on_remove
+
+    if m <= max_driver_edges:
+        adj, deg = _collect_adj(und, graph.vertices.select("vid"))
+        und.unpersist()
+        ranks = _simulate_peel(*peel_at_dg(deg, adj))
         return graph.vertices.sparkSession.createDataFrame(
             sorted((int(v), int(r)) for v, r in ranks.items()),
             "vid long, rank long",
@@ -180,7 +198,7 @@ def degeneracy_order(
     deg0 = und.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").cast("long").alias("deg")
     )
-    state = (
+    state0 = (
         graph.vertices.select("vid")
         .join(deg0, "vid", "left")
         .select(
@@ -191,8 +209,8 @@ def degeneracy_order(
         .transform(truncate_plan_lazy)
     )
     removable = F.col("rank").isNull() & (F.col("deg") <= dg)
-    spent: list[DataFrame] = []
-    for rnd in range(1, max_rounds + 1):
+
+    def superstep(state: DataFrame, rnd: int) -> DataFrame:
         # this round's removed frontier, and the decrement its edges apply
         # to surviving endpoints (edges among two removed vertices also
         # decrement, harmlessly — the endpoint's deg is frozen by its rank)
@@ -202,53 +220,24 @@ def degeneracy_order(
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.count("*").cast("long").alias("dec"))
         )
-        spent.append(state)
-        state = (
-            state.join(dec, "vid", "left")
-            .select(
-                "vid",
-                (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
-                F.when(removable, F.lit(rnd))
-                .otherwise(F.col("rank"))
-                .cast("long")
-                .alias("rank"),
-            )
-            .transform(truncate_plan_lazy)
+        return state.join(dec, "vid", "left").select(
+            "vid",
+            (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
+            F.when(removable, F.lit(rnd))
+            .otherwise(F.col("rank"))
+            .cast("long")
+            .alias("rank"),
         )
-        # the ONE action per BLOCK: materializes the k chained lazy
-        # checkpoints AND yields the stopping condition
-        if rnd % max(1, fused_rounds) == 0 or rnd == max_rounds:
-            remaining = state.where(F.col("rank").isNull()).count()
-            for st in spent:
-                release_truncated(st)
-            spent.clear()
-            gc.collect()  # flush py4j detaches (see kcore.coreness)
-            if remaining == 0:
-                break
-            if remaining <= local_cutoff:
-                # guarded tail finish: residual degrees already reflect
-                # every applied decrement (rounds complete at block end —
-                # no in-flight messages), so the local peel continues the
-                # exact cascade with ranks offset by the finished rounds
-                def make_sim(rows, adj):
-                    deg = {r["vid"]: r["deg"] for r in rows}
 
-                    def on_remove(v):
-                        for w in adj.get(v, ()):
-                            deg[w] -= 1
-                        return set(adj.get(v, ()))
+    def make_sim(rows, adj):
+        return peel_at_dg({r["vid"]: r["deg"] for r in rows}, adj)
 
-                    return deg, (lambda v: deg[v] <= dg), on_remove
-
-                done = _peel_tail_finish(
-                    state, "rank", ["deg"], und, rnd, make_sim,
-                    local_edge_cutoff,
-                )
-                if done is not None:
-                    und.unpersist()
-                    return done
+    out = _run_peel(
+        state0, superstep, "rank", ["deg"], und, make_sim,
+        max_rounds, fused_rounds, local_cutoff, local_edge_cutoff,
+    )
     und.unpersist()
-    return state.where(F.col("rank").isNotNull()).select("vid", "rank")
+    return out
 
 
 def onion_layers(
@@ -263,13 +252,12 @@ def onion_layers(
     each round removes v iff #{remaining nbrs w : core(w) ≥ core(v)} ≤
     core(v).
 
-    Same incremental shape as ``degeneracy_order`` (including the
-    ``fused_rounds`` block fusion — one stopping action per k lazily-chained
-    rounds, and the same bounded-driver fast path below
-    ``max_driver_edges``); the static edge table is annotated ONCE with
-    both endpoints' coreness so the per-round decrement (remove w →
-    decrement v iff core(w) ≥ core(v)) is a frontier join with an in-row
-    predicate, never a rejoin against vertex state."""
+    Same incremental shape as ``degeneracy_order`` (the same ``run_bsp``
+    loop with ``fused_rounds`` blocks and guarded tail finish, and the same
+    bounded-driver fast path below ``max_driver_edges``); the static edge
+    table is annotated ONCE with both endpoints' coreness so the per-round
+    decrement (remove w → decrement v iff core(w) ≥ core(v)) is a frontier
+    join with an in-row predicate, never a rejoin against vertex state."""
     from graphscope_spark.algorithms.kcore import coreness
 
     und = graph.undirected_edges(drop_self_loops=True).persist()
@@ -309,7 +297,7 @@ def onion_layers(
     qdeg0 = ecore.groupBy(F.col("dst").alias("vid")).agg(
         F.count("*").cast("long").alias("qdeg")
     )
-    state = (
+    state0 = (
         core.join(qdeg0, "vid", "left")
         .select(
             "vid",
@@ -320,62 +308,41 @@ def onion_layers(
         .transform(truncate_plan_lazy)
     )
     removable = F.col("layer").isNull() & (F.col("qdeg") <= F.col("core"))
-    spent: list[DataFrame] = []
-    for rnd in range(1, max_rounds + 1):
+
+    def superstep(state: DataFrame, rnd: int) -> DataFrame:
         frontier = state.where(removable).select(F.col("vid").alias("src"))
         dec = (
             ecore.join(frontier, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.count("*").cast("long").alias("dec"))
         )
-        spent.append(state)
-        state = (
-            state.join(dec, "vid", "left")
-            .select(
-                "vid",
-                "core",
-                (F.col("qdeg") - F.coalesce(F.col("dec"), F.lit(0))).alias("qdeg"),
-                F.when(removable, F.lit(rnd))
-                .otherwise(F.col("layer"))
-                .cast("long")
-                .alias("layer"),
-            )
-            .transform(truncate_plan_lazy)
+        return state.join(dec, "vid", "left").select(
+            "vid",
+            "core",
+            (F.col("qdeg") - F.coalesce(F.col("dec"), F.lit(0))).alias("qdeg"),
+            F.when(removable, F.lit(rnd))
+            .otherwise(F.col("layer"))
+            .cast("long")
+            .alias("layer"),
         )
-        if rnd % max(1, fused_rounds) == 0 or rnd == max_rounds:
-            remaining = state.where(F.col("layer").isNull()).count()
-            for st in spent:
-                release_truncated(st)
-            spent.clear()
-            gc.collect()  # flush py4j detaches (see kcore.coreness)
-            if remaining == 0:
-                break
-            if remaining <= local_cutoff:
-                # guarded tail finish (degeneracy_order's contract): the
-                # residual qualifying degrees already include every
-                # applied decrement; continue the cascade locally with
-                # layers offset by the finished rounds
-                def make_sim(rows, adj):
-                    cd = {r["vid"]: r["core"] for r in rows}
-                    qdeg = {r["vid"]: r["qdeg"] for r in rows}
 
-                    def on_remove(w):
-                        touched = set()
-                        for v in adj.get(w, ()):
-                            qdeg[v] -= 1
-                            touched.add(v)
-                        return touched
+    def make_sim(rows, adj):
+        cd = {r["vid"]: r["core"] for r in rows}
+        qdeg = {r["vid"]: r["qdeg"] for r in rows}
 
-                    return qdeg, (lambda v: qdeg[v] <= cd[v]), on_remove
+        def on_remove(w):
+            touched = set()
+            for v in adj.get(w, ()):
+                qdeg[v] -= 1
+                touched.add(v)
+            return touched
 
-                done = _peel_tail_finish(
-                    state, "layer", ["core", "qdeg"], ecore, rnd, make_sim,
-                    local_edge_cutoff,
-                )
-                if done is not None:
-                    ecore.unpersist()
-                    und.unpersist()
-                    return done
+        return qdeg, (lambda v: qdeg[v] <= cd[v]), on_remove
+
+    out = _run_peel(
+        state0, superstep, "layer", ["core", "qdeg"], ecore, make_sim,
+        max_rounds, fused_rounds, local_cutoff, local_edge_cutoff,
+    )
     ecore.unpersist()
     und.unpersist()
-    return state.where(F.col("layer").isNotNull()).select("vid", "layer")
+    return out

@@ -19,15 +19,17 @@ Spark shape (one shuffle-agg + one join per superstep):
 * dangling mass is a scalar: folded into the *previous* round's convergence
   aggregate so each superstep costs exactly one extra one-row collect;
 * per-round lineage truncation + durable checkpoint/resume via bsp.run_bsp.
-* ``fused_rounds=k`` stacks k supersteps into ONE Spark job (the dangling
-  scalar moves in-plan as a broadcast 1-row aggregate, so no driver
-  round-trip is needed between fused rounds). Arithmetic is identical per
-  round; only the barrier count changes — k× fewer driver round-trips and
-  scheduler waits, the dominant cost at high executor counts. Convergence
-  (reference semantics: last round's Σ|Δ| < N·tol) is then only CHECKED at
-  block boundaries, so a tol>0 run may execute up to k-1 extra rounds past
-  the reference's stopping round — use fused_rounds>1 with tol=0 /
-  fixed-round workloads, or accept the documented overshoot.
+* ``fused_rounds=k`` stacks k supersteps into ONE Spark job via
+  ``run_bsp(fused_rounds=k)``. The first round after each block-end
+  collect uses the collected dangling mass; later inner rounds compute it
+  in-plan as a broadcast 1-row aggregate, so no driver round-trip is needed
+  between fused rounds. Arithmetic is identical per round and ``max_rounds``
+  is hit exactly; only the barrier count changes — k× fewer driver
+  round-trips and scheduler waits, the dominant cost at high executor
+  counts. Convergence (reference semantics: last round's Σ|Δ| < N·tol) is
+  only CHECKED at block boundaries, so a tol>0 run may execute up to k-1
+  extra rounds past the reference's stopping round — use fused_rounds>1
+  with tol=0 / fixed-round workloads, or accept the documented overshoot.
 """
 
 from __future__ import annotations
@@ -54,8 +56,8 @@ def pagerank(
     """Returns BSPResult whose state is (vid, rank).
 
     ``fused_rounds=k`` runs k power-iteration rounds per Spark job (see
-    module docstring); ``max_rounds`` is still counted in supersteps and is
-    rounded UP to a multiple of k.
+    module docstring). A resume under a different ``alpha``/``tol`` than the
+    checkpoint was written with is refused (``run_bsp``).
 
     ``weight_col``: name of a POSITIVE edge-weight column on ``graph.edges``
     — rank then distributes proportionally to weight (NetworkX
@@ -116,31 +118,17 @@ def pagerank(
         .repartition(P, F.pmod(F.col("vid"), F.lit(P)))
     )
 
-    # dangling mass for the upcoming round; updated by scalar_fn each round
+    # dangling mass for the upcoming round; updated by scalar_fn each block
     # (one collect returns both Σ|Δ| and Σ_dangling r — the Spark analog of
     # the reference's two Sum() allreduces at pagerank_networkx.h:85,146,159).
-    k = max(1, int(fused_rounds))
-
-    holder = {"dmass": None}
+    # "fresh": the next round is the first after that collect and may use it;
+    # later rounds of a fused block compute the mass in-plan.
+    holder = {"dmass": None, "fresh": True}
+    dmass_of = F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
     if resume and checkpoint_dir:
         loaded = load_checkpoint(spark, checkpoint_dir)
         if loaded is not None:
-            st, _, man = loaded
-            # the manifest's 'superstep' counts BLOCKS of fused_rounds; a
-            # resume under a different k would silently misinterpret the
-            # round budget and the returned superstep count — refuse.
-            ck_k = int(man.get("fused_rounds", 1))
-            if ck_k != k:
-                raise ValueError(
-                    f"pagerank resume: checkpoint at {checkpoint_dir} was "
-                    f"written with fused_rounds={ck_k} but this run asked "
-                    f"for fused_rounds={fused_rounds}; pass "
-                    f"fused_rounds={ck_k} (block counters are only "
-                    "comparable at the same fusion factor)"
-                )
-            holder["dmass"] = (
-                st.agg(F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))).collect()[0][0]
-            ) or 0.0
+            holder["dmass"] = loaded[0].agg(dmass_of).collect()[0][0] or 0.0
     if holder["dmass"] is None:
         n_dangling = state0.where("dangling").count()
         holder["dmass"] = n_dangling / n
@@ -176,39 +164,32 @@ def pagerank(
         )
 
     def superstep(state: DataFrame, rnd: int) -> DataFrame:
-        if k == 1:
+        if holder["fresh"]:
+            holder["fresh"] = False
             return one_round(state, F.lit(alpha * holder["dmass"] / n))
-        s = state
-        for _ in range(k):
-            s = one_round(s, None)
-        return s
+        return one_round(state, None)
 
     def scalar_fn(state: DataFrame) -> float:
         row = state.agg(
             F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dmass"),
+            dmass_of.alias("dmass"),
         ).collect()[0]
         holder["dmass"] = row["dmass"] or 0.0
+        holder["fresh"] = True
         return row["delta"]
 
     res = run_bsp(
         state0,
         superstep,
-        max_rounds=-(-max_rounds // k),  # blocks of k supersteps, rounded up
+        max_rounds=max_rounds,
         scalar_fn=scalar_fn,
         converged_fn=lambda delta, rnd: delta < n * tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        meta={"algorithm": "pagerank", "alpha": alpha, "tol": tol, "n": n,
-              "fused_rounds": k},
-        # a fused block references the state 3× per inner round (contrib,
-        # dangling agg, join base), so sizeInBytes stats grow ~3^k digits
-        # per block — reset them with the fresh-RDD rebuild EVERY block
-        # (see bsp.truncate_plan docstring / the stats-explosion note)
-        stats_reset_every=1 if k > 1 else 8,
+        meta={"algorithm": "pagerank", "alpha": alpha, "tol": tol, "n": n},
+        fused_rounds=fused_rounds,
     )
     ew.unpersist()
-    res.supersteps *= k
     res.state = res.state.select("vid", "rank")
     return res

@@ -23,6 +23,7 @@ Scale concerns handled centrally (north rule):
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import shutil
@@ -210,6 +211,13 @@ def _manifest_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, "MANIFEST.json")
 
 
+def _write_manifest(ckpt_dir: str, manifest: dict) -> None:
+    tmp_manifest = _manifest_path(ckpt_dir) + ".tmp"
+    with open(tmp_manifest, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp_manifest, _manifest_path(ckpt_dir))
+
+
 def save_checkpoint(
     state: DataFrame, ckpt_dir: str, superstep: int, meta: dict | None = None
 ) -> DataFrame:
@@ -223,18 +231,14 @@ def save_checkpoint(
     if os.path.exists(step_dir):
         shutil.rmtree(step_dir)
     os.replace(tmp_dir, step_dir)
-    manifest = {
+    _write_manifest(ckpt_dir, {
         "superstep": superstep,
         "path": step_dir,
         "num_partitions": state.rdd.getNumPartitions(),
         "schema": state.schema.json(),
         "ts": time.time(),
         **(meta or {}),
-    }
-    tmp_manifest = _manifest_path(ckpt_dir) + ".tmp"
-    with open(tmp_manifest, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp_manifest, _manifest_path(ckpt_dir))
+    })
     return spark.read.parquet(step_dir)
 
 
@@ -246,6 +250,26 @@ def load_checkpoint(spark: SparkSession, ckpt_dir: str) -> tuple[DataFrame, int,
     with open(mp) as f:
         manifest = json.load(f)
     return spark.read.parquet(manifest["path"]), manifest["superstep"], manifest
+
+
+# manifest fields written by save_checkpoint / run_bsp itself; everything
+# else in a manifest is the caller's ``meta``
+_MANIFEST_KEYS = {"superstep", "path", "num_partitions", "schema", "ts", "final"}
+
+
+def _check_resume_meta(manifest: dict, meta: dict | None, ckpt_dir: str) -> None:
+    """Refuse to resume a checkpoint written under different parameters —
+    continuing e.g. a PageRank run with another ``alpha`` would silently mix
+    two computations. Budgets (``max_rounds``) are run_bsp arguments, not
+    meta, so a resume may always extend them."""
+    stored = {k: v for k, v in manifest.items() if k not in _MANIFEST_KEYS}
+    asked = json.loads(json.dumps(meta or {}))  # same JSON round-trip as stored
+    if stored != asked:
+        raise ValueError(
+            f"resume: checkpoint at {ckpt_dir} was written with parameters "
+            f"{stored} but this run asked for {asked}; resume with the "
+            "original parameters or use a fresh checkpoint_dir"
+        )
 
 
 # --- the loop -------------------------------------------------------------------
@@ -276,6 +300,10 @@ class BSPResult:
             self.ck_ids = []
 
 
+# stats-resetting rebuild cadence of an unfused loop (see run_bsp)
+_STATS_RESET_EVERY = 8
+
+
 def run_bsp(
     state: DataFrame,
     superstep_fn: Callable[[DataFrame, int], DataFrame],
@@ -286,36 +314,9 @@ def run_bsp(
     checkpoint_every: int = 5,
     resume: bool = False,
     meta: dict | None = None,
-    truncate_every: int = 1,
-    stats_reset_every: int = 8,
-    fused_rounds: int | Callable[[int], int] = 1,
-    fuse_cut_every: int = 4,
+    fused_rounds: int = 1,
 ) -> BSPResult:
     """Run supersteps until convergence.
-
-    ``fused_rounds`` may be a callable ``next_round -> k`` (a fusion
-    SCHEDULE): deep-but-cheap monotone relaxations (topological levels,
-    late peel rounds) grow k geometrically so the number of driver
-    barriers is O(log depth) instead of O(depth) — the barrier, not the
-    work, dominates them.
-
-    ``fused_rounds=k`` stacks k supersteps into ONE Spark job: the inner
-    applications only compose lazy plans; the block's convergence aggregate
-    is the single action that materializes them all. Only valid for
-    MONOTONE supersteps where an all-quiet round stays quiet forever (BFS /
-    SSSP relaxation / min-label propagation) — there, overshooting the
-    fixpoint by up to k-1 rounds is semantically free (empty frontiers
-    produce no messages), so the block-end convergence check is exact.
-    NOT valid for fixed-round semantics (CDLP's exactly-10-rounds contract)
-    where the round budget must be hit precisely — ``max_rounds`` is still
-    respected (the last block is truncated to fit). With k>1 the reported
-    ``BSPResult.supersteps`` (and the metrics' 'superstep' field) is the
-    BLOCK-END round — up to k-1 past the true convergence round; results
-    and resume are unaffected, but round counts are not comparable across
-    different ``fused_rounds`` settings. Checkpoint manifests
-    store TRUE superstep numbers, so a run resumed with a different
-    ``fused_rounds`` keeps a correct round budget (unlike a block-counting
-    scheme, no cross-validation is needed).
 
     ``superstep_fn(state, round)`` returns the *lazy* next state, which may
     carry helper columns (e.g. the previous value). Each round the loop
@@ -327,6 +328,24 @@ def run_bsp(
     termination — reference analogs: PageRank's ``Σ|Δ| < tol·N``
     (`pagerank_networkx.h:135-148`), WCC's "no vertex changed"
     (`wcc_projected.h:175-180`).
+
+    ``fused_rounds=k`` stacks k supersteps into ONE Spark job: the inner
+    applications only compose lazy plans; the block's convergence aggregate
+    is the single action that materializes them all. Only valid for
+    MONOTONE supersteps where an all-quiet round stays quiet forever (BFS /
+    SSSP relaxation / min-label propagation / peeling) — there, overshooting
+    the fixpoint by up to k-1 rounds is semantically free (empty frontiers
+    produce no messages), so the block-end convergence check is exact. For
+    fixed-round semantics (CDLP's exactly-10-rounds contract, PageRank with
+    tol=0) the budget is still hit exactly: ``max_rounds`` truncates the
+    last block to fit. ``superstep_fn`` always receives the TRUE round
+    number; with k>1 the reported ``BSPResult.supersteps`` (and the metrics'
+    'superstep' field) is the BLOCK-END round — up to k-1 past the true
+    convergence round. Checkpoint manifests store true round numbers, so a
+    run may resume under a different ``fused_rounds``.
+
+    ``meta`` identifies the computation; ``resume=True`` refuses (ValueError)
+    a checkpoint whose stored meta differs from it.
     """
     spark = state.sparkSession
     start_round = 0
@@ -334,101 +353,74 @@ def run_bsp(
         loaded = load_checkpoint(spark, checkpoint_dir)
         if loaded is not None:
             state, start_round, man = loaded
+            _check_resume_meta(man, meta, checkpoint_dir)
             if man.get("final"):  # already converged — nothing to redo
                 return BSPResult(state=state, supersteps=start_round, converged=True)
     mon = SparkStageMetrics(spark)
     mon.snapshot()  # drain stages from setup
     metrics: list[dict] = []
     converged = False
-    rnd = start_round
-    # States persisted (not truncated) whose lineage is still referenced by
-    # the current state; they may only be unpersisted once a truncation
-    # point (localCheckpoint / durable checkpoint) severs that lineage.
-    pending_unpersist: list[DataFrame] = []
-    fuse_of = fused_rounds if callable(fused_rounds) else (lambda _r: fused_rounds)
-    # Fire-schedule anchors (true round numbers); with k=1 these reproduce
-    # the classic every-N modular cadence, with k>1 they keep firing every
-    # ~N rounds even though rnd advances in strides that never hit N exactly.
-    last_durable = last_trunc = last_reset = start_round
+    k = max(1, int(fused_rounds))
+    rnd = last_durable = last_reset = start_round
     while rnd < max_rounds:
         t0 = time.time()
-        k = max(1, int(fuse_of(rnd)))
         block = min(k, max_rounds - rnd)
         new_state = state
-        # Inner rounds compose LAZY plans; every `fuse_cut_every` steps the
-        # plan is cut (truncate_plan_lazy: a deferred localCheckpoint whose
-        # Catalyst node carries leaf stats) so in-block self-join stats
-        # can't multiply and optimizer time stays linear in k. The cuts
+        # Inner rounds compose LAZY plans, each cut (truncate_plan_lazy: a
+        # deferred localCheckpoint whose Catalyst node carries leaf stats)
+        # so in-block self-join stats can't multiply. Each superstep
+        # references the previous state two or three times (frontier, join
+        # base, dangling mass), so a chain of d uncut rounds re-executes its
+        # first round up to 3^(d-1) times — a cut every 4 rounds took the
+        # sf0.01 coreness gate row from ~45 s to over 4 min. The cuts
         # materialize together with the block's single convergence action.
-        # In-block trade-off: each superstep references the previous state
-        # twice (frontier + join base), so between cuts the composed plan
-        # re-executes uncut inner rounds up to 2^(fuse_cut_every-1) times.
-        # fuse_cut_every=4 caps that at 8x of the (cheap, frontier-sized)
-        # inner joins; the k-fold barrier saving dominates on sparse late
-        # rounds, which is where fusion is enabled (measured in BENCH).
         inner_cuts: list[DataFrame] = []
         for j in range(1, block + 1):
             new_state = superstep_fn(new_state, rnd + j)
-            if j < block and fuse_cut_every and j % fuse_cut_every == 0:
+            if j < block:
                 new_state = truncate_plan_lazy(new_state)
                 inner_cuts.append(new_state)
         rnd += block
         # One Spark action per BLOCK: the convergence aggregate below both
-        # materializes the persisted state and returns the scalar. Lineage
-        # is truncated every `truncate_every` rounds (localCheckpoint) and
-        # durably every `checkpoint_every` rounds (parquet + manifest) —
-        # iterative plans otherwise grow without bound.
-        # Lineage truncation is a plain localCheckpoint (keeps the round
-        # output's partitioning, so next round's state⋈edges join reuses
-        # it); the stats-resetting RDD rebuild (truncate_plan) runs only
-        # every `stats_reset_every` rounds — a per-round rebuild costs an
-        # extra full-state exchange each round AND replaces real stats with
+        # materializes the new state and returns the scalar. Lineage is cut
+        # every block (lazy localCheckpoint) and durably every
+        # `checkpoint_every` rounds (parquet + manifest) — iterative plans
+        # otherwise grow without bound.
+        # A plain localCheckpoint keeps the round output's partitioning, so
+        # the next round's state⋈edges join reuses it; the stats-resetting
+        # RDD rebuild (truncate_plan) runs only every _STATS_RESET_EVERY
+        # unfused rounds — a per-round rebuild costs an extra full-state
+        # exchange each round AND replaces real stats with
         # defaultSizeInBytes (measured 7.3 → 20.5 s/superstep at 100M
         # edges), while every-8 caps sizeInBytes digit growth at ~19·2⁸ —
-        # microseconds of BigInteger math.
-        truncated = True
+        # microseconds of BigInteger math. A fused block already rebuilt
+        # every inner round, so it ends in the rebuild too.
+        # Both truncations are lazy: the convergence aggregate is the action
+        # that materializes them — ONE job per block, not two.
         if checkpoint_dir and rnd - last_durable >= checkpoint_every:
-            last_durable = last_trunc = rnd
+            last_durable = rnd
             new_state = save_checkpoint(new_state, checkpoint_dir, rnd, meta)
-        elif rnd - last_trunc >= truncate_every:
-            last_trunc = rnd
-            if stats_reset_every and rnd - last_reset >= truncate_every * stats_reset_every:
-                last_reset = rnd
-                # lazy for the same one-job-per-round reason; the rebuild
-                # node's stats reset happens at plan construction either way
-                new_state = truncate_plan(new_state, eager=False)
-            else:
-                # lazy: the convergence aggregate below is the action that
-                # materializes this checkpoint — keeps the loop at ONE job
-                # per round (eager=True ran a separate materialization job
-                # before the scalar job: 2 scheduler barriers per round)
-                new_state = local_checkpoint(new_state, eager=False)
+        elif block > 1 or rnd - last_reset >= _STATS_RESET_EVERY:
+            last_reset = rnd
+            new_state = truncate_plan(new_state, eager=False)
+            # cyclic Python refs delay py4j detach of spent rounds' JVM
+            # objects (plans, RDD handles) until a gc cycle runs — without
+            # this, hundreds of rounds of pinned plan trees OOM the driver
+            gc.collect()
         else:
-            new_state = new_state.persist()
-            truncated = False
+            new_state = local_checkpoint(new_state, eager=False)
         # Materialize the new state (the convergence aggregate is the one
-        # action) BEFORE unpersisting the old — evicting first would force
+        # action) BEFORE releasing the old — evicting first would force
         # recomputation of the whole since-last-truncation lineage.
         scalar = scalar_fn(new_state)
-        if truncated:
-            # new_state's lineage is severed: everything older is releasable,
-            # including the in-block plan cuts (cached by the action above).
-            # release_state, not unpersist: most of these frames are
-            # checkpoint-backed, and unpersist alone leaves their blocks
-            # registered forever (one full state copy per round).
-            for st in pending_unpersist:
-                release_state(st)
-            pending_unpersist.clear()
-            release_state(state)
-            for st in inner_cuts:
-                release_state(st)
-        else:
-            # new_state (merely persisted) still references `state`'s
-            # lineage — deferring the unpersist keeps a cache eviction of
-            # new_state recomputable (the previous state is typically a
-            # localCheckpoint whose blocks are freed on unpersist).
-            pending_unpersist.append(state)
-            pending_unpersist.extend(inner_cuts)
+        # new_state's lineage is severed: the previous state and the
+        # in-block plan cuts (cached by the action above) are releasable.
+        # release_state, not unpersist: these frames are checkpoint-backed,
+        # and unpersist alone leaves their blocks registered forever (one
+        # full state copy per round).
+        release_state(state)
+        for st in inner_cuts:
+            release_state(st)
         state = new_state
         m = {"superstep": rnd, "rounds_in_job": block,
              "wall_s": round(time.time() - t0, 4),
@@ -437,17 +429,15 @@ def run_bsp(
         if converged_fn(scalar, rnd):
             converged = True
             break
-    # If the loop exited between truncation points, earlier states are still
-    # referenced by the final state's lineage — sever it once, then release
-    # them (otherwise they leak in the session CacheManager).
-    if pending_unpersist:
-        state = local_checkpoint(state, eager=True)
-        for st in pending_unpersist:
-            release_state(st)
-        pending_unpersist.clear()
     # Mark final only on true convergence: a max_rounds-bounded run must stay
     # resumable with a larger budget (e.g. PageRank stopped early by budget).
-    if checkpoint_dir and converged:
+    if checkpoint_dir and converged and rnd == last_durable:
+        # the converged state IS the checkpoint just written: rewriting it
+        # would delete the directory the manifest points at before the new
+        # copy is promoted — only the manifest changes
+        with open(_manifest_path(checkpoint_dir)) as f:
+            _write_manifest(checkpoint_dir, {**json.load(f), "final": True})
+    elif checkpoint_dir and converged:
         state = save_checkpoint(state, checkpoint_dir, rnd, {**(meta or {}), "final": True})
     elif checkpoint_dir and rnd != last_durable:
         state = save_checkpoint(state, checkpoint_dir, rnd, meta)

@@ -7,6 +7,7 @@ Float comparisons use allclose(1e-6) like the reference's
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from graphscope_spark.algorithms import cdlp, lcc, pagerank, total_triangles, triangles, wcc
@@ -47,6 +48,45 @@ def test_pagerank_fused_matches_unfused(tiny_graph):
     assert set(ga) == set(gb)
     for v in ga:
         assert np.isclose(ga[v], gb[v], atol=1e-12), (v, ga[v], gb[v])
+
+
+def _assert_ranks_close(a, b):
+    ga = _collect_map(a.state, "vid", "rank")
+    gb = _collect_map(b.state, "vid", "rank")
+    assert set(ga) == set(gb)
+    for v in ga:
+        assert np.isclose(ga[v], gb[v], rtol=0, atol=1e-12), (v, ga[v], gb[v])
+
+
+def test_pagerank_fused_exact_round_budget(tiny_graph):
+    # a fused run hits max_rounds exactly: the last block is cut to fit
+    a = pagerank(tiny_graph, alpha=0.85, tol=0.0, max_rounds=10)
+    b = pagerank(tiny_graph, alpha=0.85, tol=0.0, max_rounds=10, fused_rounds=4)
+    assert a.supersteps == b.supersteps == 10
+    _assert_ranks_close(a, b)
+
+
+def test_pagerank_resume_across_fusion(tiny_graph, tmp_path):
+    # checkpoints store true round numbers: a fused k=4 run stopped at round
+    # 6 resumes unfused and lands on the uninterrupted run's ranks
+    ck = str(tmp_path / "pr_ck")
+    part = pagerank(tiny_graph, tol=0.0, max_rounds=6, fused_rounds=4,
+                    checkpoint_dir=ck, checkpoint_every=1)
+    assert part.supersteps == 6 and not part.converged
+    resumed = pagerank(tiny_graph, tol=0.0, max_rounds=20,
+                       checkpoint_dir=ck, checkpoint_every=1, resume=True)
+    full = pagerank(tiny_graph, tol=0.0, max_rounds=20)
+    assert resumed.supersteps == full.supersteps == 20
+    _assert_ranks_close(resumed, full)
+
+
+def test_pagerank_resume_refuses_other_alpha(tiny_graph, tmp_path):
+    ck = str(tmp_path / "pr_ck")
+    pagerank(tiny_graph, alpha=0.85, tol=0.0, max_rounds=3,
+             checkpoint_dir=ck, checkpoint_every=1)
+    with pytest.raises(ValueError, match="parameters"):
+        pagerank(tiny_graph, alpha=0.5, tol=0.0, max_rounds=10,
+                 checkpoint_dir=ck, resume=True)
 
 
 def test_wcc_tiny(tiny_graph):

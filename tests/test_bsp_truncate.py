@@ -1,34 +1,13 @@
-"""run_bsp with truncate_every > 1: the persist-only rounds must keep their
-predecessor states alive until the next lineage-truncation point (a cache
-eviction of a merely-persisted state otherwise recomputes through a freed
-localCheckpoint and fails)."""
+"""run_bsp loop contracts: fused overshoot and a crash-safe final
+checkpoint."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import run_bsp
-
-
-def test_run_bsp_truncate_every_3(spark):
-    state0 = spark.range(0, 100).select(
-        F.col("id").alias("vid"), F.lit(0).alias("x")
-    )
-
-    def step(state, rnd):
-        return state.select("vid", (F.col("x") + 1).alias("x"))
-
-    res = run_bsp(
-        state0,
-        step,
-        max_rounds=10,
-        scalar_fn=lambda st: float(st.agg(F.max("x")).collect()[0][0]),
-        converged_fn=lambda mx, rnd: mx >= 7,
-        truncate_every=3,
-    )
-    assert res.converged and res.supersteps == 7
-    vals = {r["x"] for r in res.state.collect()}
-    assert vals == {7}
+from graphscope_spark.bsp import load_checkpoint, run_bsp
 
 
 def test_sssp_fused_overshoot_equivalence(corpus_graph):
@@ -48,49 +27,43 @@ def test_sssp_fused_overshoot_equivalence(corpus_graph):
     assert len(base) > 1 and base == fused
 
 
-def test_run_bsp_callable_fusion_schedule(spark):
-    """fused_rounds may be a SCHEDULE (next_round -> k): a geometric
-    schedule must reach the identical fixpoint as static fusion, with the
-    block sizes actually growing (observed via the schedule's call log)."""
-    import pyspark.sql.functions as F
+def test_final_checkpoint_survives_crash_in_promotion(spark, tmp_path, monkeypatch):
+    """A run that converges on a round it just wrote durably must not
+    rewrite that checkpoint: a crash while promoting the rewritten step
+    directory would leave the manifest pointing at nothing."""
+    ck = str(tmp_path / "ck")
+    state0 = spark.range(0, 20).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
+    converged = []
+    real_replace = os.replace
 
-    from graphscope_spark.bsp import run_bsp
+    def crashing_replace(src, dst):
+        if converged and os.path.isdir(src):
+            raise OSError(f"injected crash promoting {src}")
+        return real_replace(src, dst)
 
-    state0 = spark.createDataFrame(
-        [(i, 0) for i in range(8)], "vid long, val long"
-    )
+    def converged_fn(below, rnd):
+        if below == 0:
+            converged.append(rnd)
+        return below == 0
 
-    def superstep(st, rnd):
-        return st.select(
-            "vid",
-            F.when(F.col("val") < 21, F.col("val") + 1)
-            .otherwise(F.col("val"))
-            .alias("val"),
+    monkeypatch.setattr(os, "replace", crashing_replace)
+    try:
+        run_bsp(
+            state0,
+            lambda st, rnd: st.select(
+                "vid", F.least(F.col("x") + 1, F.lit(3)).alias("x")
+            ),
+            max_rounds=10,
+            scalar_fn=lambda st: st.where(F.col("x") < 3).count(),
+            converged_fn=converged_fn,
+            checkpoint_dir=ck,
+            checkpoint_every=1,
+            meta={"algorithm": "count_to_3"},
         )
-
-    def scalar(st):
-        return float(st.where(F.col("val") < 21).count())
-
-    static = run_bsp(
-        state0, superstep, max_rounds=64, scalar_fn=scalar,
-        converged_fn=lambda c, r: c == 0.0, fused_rounds=4,
-    )
-    calls = []
-
-    def schedule(rnd):
-        k = min(16, 2 << (rnd // 4))
-        calls.append((rnd, k))
-        return k
-
-    dyn = run_bsp(
-        state0, superstep, max_rounds=64, scalar_fn=scalar,
-        converged_fn=lambda c, r: c == 0.0, fused_rounds=schedule,
-    )
-    assert static.converged and dyn.converged
-    sa = {r["vid"]: r["val"] for r in static.state.collect()}
-    sb = {r["vid"]: r["val"] for r in dyn.state.collect()}
-    assert sa == sb == {i: 21 for i in range(8)}
-    ks = [k for _, k in calls]
-    assert ks[0] == 2 and max(ks) > ks[0]  # the schedule actually grew
-    static.release()
-    dyn.release()
+    except OSError:
+        pass  # the crash is the point; the last-good state must survive it
+    monkeypatch.undo()
+    assert converged == [3]
+    state, step, man = load_checkpoint(spark, ck)
+    assert step == 3 and man.get("final")
+    assert {r["x"] for r in state.collect()} == {3}

@@ -185,11 +185,17 @@ def test_bounded_driver_paths_match_distributed(tiny_graph):
                 fn(tiny_graph, max_driver_edges=0).collect()}
         assert fast == dist, fn.__name__
     # the guarded tail finish (local_cutoff default) and the
-    # fully-distributed peel (local_cutoff=0) must agree too
-    for fn, col in ((degeneracy_order, "rank"), (onion_layers, "layer")):
-        tail = {r["vid"]: r[col] for r in
-                fn(tiny_graph, max_driver_edges=0, fused_rounds=2).collect()}
-        full = {r["vid"]: r[col] for r in
-                fn(tiny_graph, max_driver_edges=0, fused_rounds=2,
-                   local_cutoff=0).collect()}
-        assert tail == full, fn.__name__
+    # fully-distributed peel (local_cutoff=0) must agree too, at even and
+    # odd block sizes (the tail hand-off offset is the block-end round)
+    for k in (2, 3):
+        for fn, col in ((degeneracy_order, "rank"), (onion_layers, "layer")):
+            tail = {r["vid"]: r[col] for r in
+                    fn(tiny_graph, max_driver_edges=0, fused_rounds=k).collect()}
+            full = {r["vid"]: r[col] for r in
+                    fn(tiny_graph, max_driver_edges=0, fused_rounds=k,
+                       local_cutoff=0).collect()}
+            assert tail == full, (fn.__name__, k)
+        fused = {r["vid"]: r["core"] for r in
+                 coreness(tiny_graph, max_driver_edges=0, fused_rounds=k).collect()}
+        assert fused == {r["vid"]: r["core"] for r in
+                         coreness(tiny_graph).collect()}, ("coreness", k)

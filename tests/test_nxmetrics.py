@@ -287,7 +287,7 @@ def test_topological_generations_raises_on_cycle(spark):
     )
     g = from_edge_df(df, num_partitions=2)
     with pytest.raises(ValueError, match="cycle"):
-        topological_generations(g, block_rounds=2)
+        topological_generations(g, fused_rounds=2)
 
 
 def test_topological_generations_local_finish_matches_distributed(spark):
@@ -305,12 +305,12 @@ def test_topological_generations_local_finish_matches_distributed(spark):
     g = from_edge_df(df, num_partitions=2)
     with_local = {
         r["vid"]: r["gen"]
-        for r in topological_generations(g, block_rounds=4).collect()
+        for r in topological_generations(g, fused_rounds=4).collect()
     }
     distributed = {
         r["vid"]: r["gen"]
         for r in topological_generations(
-            g, block_rounds=4, local_cutoff=0
+            g, fused_rounds=4, local_cutoff=0
         ).collect()
     }
     assert with_local == distributed

@@ -128,8 +128,12 @@ directly (tools/check_gate timings + controlled warm-process A/Bs):
   uncut chain re-expands the shared DAG into a tree that doubles per
   round (2^k nodes); (3) truncate-every-round + stopping-count fused to
   one action per fused_rounds block — the round-4 shape (peel 125.7 →
-  ~91 s, onion 123.4 → ~63 s cold; ~19 s warm). ROUND 5 closed the rest
-  of the gap with a guarded LOCAL TAIL FINISH: after each block the
+  ~91 s, onion 123.4 → ~63 s cold; ~19 s warm). That shape is now
+  bsp.run_bsp's one fused loop, which the peel loops, coreness,
+  topological_generations, PageRank and BFS/SSSP all run on: every inner
+  round is cut and each fused block ends in the stats-resetting rebuild
+  (a cut every 4 rounds instead took coreness past 4 min). ROUND 5
+  closed the rest of the gap with a guarded LOCAL TAIL FINISH: after each block the
   stopping aggregate already counts the residual, and once it (and the
   counted residual-internal edge set) fits under explicit cutoffs the
   remaining cascade finishes in one bounded driver pass with ranks
