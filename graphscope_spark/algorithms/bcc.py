@@ -9,9 +9,11 @@ point iff it belongs to more than one block.
 
 Spark shape (no DFS — low-link is inherently sequential):
 
-1. **BFS spanning forest** (shared shape with `algorithms/bridges.py`):
-   multi-root level-synchronous BFS from each component's min vid, min-vid
-   parent per vertex; ``dist(parent) = dist(v) − 1`` exactly.
+1. **BFS spanning forest** (`_spanning_forest`, shared with
+   `algorithms/bridges.py`): the shared multi-root level-synchronous loop
+   `closeness.multi_source_bfs` from each component's min vid over the
+   undirected view, then one join derives the min-vid parent per vertex;
+   ``dist(parent) = dist(v) − 1`` exactly.
 2. **Fundamental-cycle covering via LCA climb** — every non-tree edge
    {a, b} plus the tree path a→lca→b is a simple cycle. Both endpoints
    climb parent pointers level-synchronously (the deeper side first, both
@@ -43,10 +45,12 @@ no driver-side graph state.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import truncate_plan, truncate_plan_lazy
+from graphscope_spark.bsp import release_truncated, truncate_plan, truncate_plan_lazy
 from graphscope_spark.graph import LinkGraph
 
 def _edge_key(a, b):
@@ -54,61 +58,56 @@ def _edge_key(a, b):
 
 
 def _spanning_forest(graph: LinkGraph, max_rounds: int):
-    """(settled, sym, depth): BFS forest (vid, dist, parent) rooted at each
-    component's min vid — the same forest `algorithms/bridges.py` builds."""
+    """(forest, sym, depth): BFS forest (vid, dist, parent) rooted at each
+    component's min vid, the persisted symmetric edges (caller unpersists)
+    and the deepest level. `closeness.multi_source_bfs` over the undirected
+    view, then ONE join derives ``parent(v) = min{u : (u,v) ∈ sym,
+    dist(u)+1 = dist(v)}`` (as `traversal.bfs_tree` does)."""
+    from graphscope_spark.algorithms.closeness import multi_source_bfs
     from graphscope_spark.algorithms.wcc import wcc
 
+    # filled by multi_source_bfs's first action (its own edge-table build)
     sym = graph.undirected_edges(drop_self_loops=True).repartition(F.col("src")).persist()
-    sym.count()
-    comp = wcc(graph).state
-    settled = (
-        comp.where(F.col("vid") == F.col("comp"))
-        .select(
-            "vid",
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(None).cast("long").alias("parent"),
-        )
-        .transform(truncate_plan_lazy)
+    comp = wcc(graph).state  # (vid, comp); comp = min vid of the component
+    roots = comp.where(F.col("vid") == F.col("comp"))
+    und = LinkGraph(graph.vertices, sym, graph.num_partitions)
+    # 2-hop blocks: web-graph forests are a few levels deep, and every hop
+    # a block runs past the last level still costs its shuffles
+    settled = multi_source_bfs(und, roots, max_rounds, fused_rounds=2)
+    dist = settled.select("vid", "dist")
+    parents = (
+        sym.join(dist.select(F.col("vid").alias("src"), F.col("dist").alias("du")), "src")
+        .join(dist.select(F.col("vid").alias("dst"), F.col("dist").alias("dv")), "dst")
+        .where(F.col("du") + 1 == F.col("dv"))
+        .groupBy("dst")
+        .agg(F.min("src").alias("parent"))
     )
-    frontier = settled
-    depth = 0
-    while depth < max_rounds:
-        depth += 1
-        cand = (
-            frontier.join(sym, frontier["vid"] == sym["src"])
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min("src").alias("parent"))
-        )
-        new = (
-            cand.join(settled.select("vid"), "vid", "anti")
-            .select("vid", F.lit(depth).cast("long").alias("dist"), "parent")
-            .transform(truncate_plan_lazy)
-        )
-        if new.count() == 0:
-            depth -= 1
-            break
-        settled = settled.unionByName(new).transform(truncate_plan_lazy)
-        frontier = new
-    return settled, sym, depth
+    forest = (
+        dist.join(parents, dist["vid"] == parents["dst"], "left")
+        .select(dist["vid"], dist["dist"], F.col("parent"))
+        .transform(truncate_plan)
+    )
+    release_truncated(settled)
+    depth = forest.agg(F.max("dist")).collect()[0][0] or 0
+    return forest, sym, depth
 
 
 def bcc(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
     """(a, b, block) — every undirected simple edge with its biconnected-
-    component label (min canonical a·2³²+b key in the block)."""
+    component label (the lexicographic-min canonical "a:b" edge key in the
+    block)."""
     spark = graph.vertices.sparkSession
-    settled, sym, depth = _spanning_forest(graph, max_rounds)
-    settled = settled.persist()
-    settled.count()
+    forest, sym, depth = _spanning_forest(graph, max_rounds)
     und = sym.where(F.col("src") < F.col("dst")).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     )
-    tree_canon = settled.where(F.col("parent").isNotNull()).select(
+    tree_canon = forest.where(F.col("parent").isNotNull()).select(
         F.least("parent", "vid").alias("a"), F.greatest("parent", "vid").alias("b")
     )
     nontree = und.join(tree_canon, ["a", "b"], "anti")
 
     # -- LCA climb: emit (nkey, tkey) cover pairs ---------------------------
-    pos = settled.select("vid", "dist", "parent")
+    pos = forest.select("vid", "dist", "parent")
     state = (
         nontree.select(_edge_key(F.col("a"), F.col("b")).alias("nkey"), "a", "b")
         .join(pos.select(F.col("vid").alias("a"), F.col("dist").alias("du")), "a")
@@ -117,7 +116,8 @@ def bcc(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .transform(truncate_plan_lazy)
     )
-    cover = spark.createDataFrame([], "nkey string, tkey string")
+    # one truncated leaf per climb step, unioned once after the loop
+    steps = [spark.createDataFrame([], "nkey string, tkey string")]
     for _ in range(2 * depth + 2):
         if state.count() == 0:
             break
@@ -135,10 +135,8 @@ def bcc(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
         emitted_v = stepped.where(lift_v).select(
             "nkey", _edge_key(F.least("v", "pv"), F.greatest("v", "pv")).alias("tkey")
         )
-        cover = cover.unionByName(emitted_u).unionByName(emitted_v).transform(
-            truncate_plan
-        )
-        state = (
+        steps.append(emitted_u.unionByName(emitted_v).transform(truncate_plan))
+        climbed = (
             stepped.select(
                 "nkey",
                 F.when(lift_u, F.col("pu")).otherwise(F.col("u")).alias("u"),
@@ -149,8 +147,12 @@ def bcc(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
             .where(F.col("u") != F.col("v"))
             .transform(truncate_plan)
         )
-    cover = cover.distinct().persist()
-    cover.count()
+        release_truncated(state)
+        state = climbed
+    release_truncated(state)
+    cover = truncate_plan(reduce(DataFrame.unionByName, steps).distinct())
+    for df in steps:
+        release_truncated(df)
 
     # -- alternating min-label CC over the bipartite cover graph ------------
     lt = tree_canon.select(
@@ -191,8 +193,8 @@ def bcc(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
         "a", "b", _edge_key(F.col("a"), F.col("b")).alias("nkey")
     ).join(ln, "nkey").select("a", "b", F.col("lbl").alias("block"))
     out = tree_out.unionByName(nontree_out).localCheckpoint(eager=True)
-    cover.unpersist()
-    settled.unpersist()
+    release_truncated(cover)
+    release_truncated(forest)
     sym.unpersist()
     return out
 

@@ -12,9 +12,10 @@ betweenness(v) = Σ_s δ_s(v) (v ≠ s).
 
 Spark shape (the 100 TB posture):
 
-* the source fan-out lives INSIDE the data plane — state is a
-  (root, vid, dist, sigma) pair table, so one superstep advances EVERY
-  root's BFS at once (same shape as ``closeness.multi_source_bfs``);
+* the source fan-out lives INSIDE the data plane — the forward sweep is
+  the shared level BFS ``closeness.multi_source_bfs(path_counts=True)``
+  over a (root, vid, dist, sigma) pair table, so one superstep advances
+  EVERY root's BFS at once;
 * the backward sweep is level-synchronous over the SAME pair table: one
   join+agg per BFS level, walking dist = D-1 … 1; supersteps = 2·diameter
   regardless of how many roots are sampled;
@@ -29,64 +30,52 @@ to the DuckDB gate oracle which unrolls the identical recurrence.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import truncate_plan, truncate_plan_lazy
+from graphscope_spark.algorithms.closeness import multi_source_bfs
+from graphscope_spark.bsp import truncate_plan
 from graphscope_spark.graph import LinkGraph
 
 
 def _brandes_tables(
     graph: LinkGraph, roots: DataFrame, max_rounds: int
-) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """Shared Brandes engine: returns (edges, settled, deltas, level) —
-    the persisted symmetric edge table, the forward BFS pair table
-    (root, vid, dist, sigma), the finalized backward dependencies
-    (root, vid, delta) for 0 < dist < level (the deepest level's delta is
-    identically 0 and is omitted; consumers coalesce), and the deepest
-    level reached. Caller owns ``edges`` and must unpersist it."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared Brandes engine: returns (edges, settled, deltas) — the
+    persisted symmetric edge table, the forward BFS pair table
+    (root, vid, dist, sigma) and the finalized backward dependencies
+    (root, vid, delta) for 0 < dist < the deepest level (whose delta is
+    identically 0 and is omitted; consumers coalesce). Caller owns
+    ``edges`` and must unpersist it."""
     edges = (
         graph.undirected_edges(drop_self_loops=True)
         .repartition(F.col("src"))
-        .persist()
+        .persist()  # filled by multi_source_bfs's own edge-table build
     )
-    edges.count()
 
-    # -- forward: level-synchronous multi-source BFS with path counts -------
-    settled = roots.select(
-        F.col("vid").alias("root"),
-        F.col("vid"),
-        F.lit(0).cast("long").alias("dist"),
-        F.lit(1.0).alias("sigma"),
-    ).transform(truncate_plan_lazy)
-    frontier = settled
-    level = 0
-    while level < max_rounds:
-        level += 1
-        cand = (
-            frontier.join(edges, frontier["vid"] == edges["src"])
-            .groupBy("root", F.col("dst").alias("vid"))
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        new = (
-            cand.join(settled.select("root", "vid"), ["root", "vid"], "anti")
-            .select("root", "vid", F.lit(level).cast("long").alias("dist"), "sigma")
-            .transform(truncate_plan_lazy)
-        )
-        if new.count() == 0:
-            level -= 1
-            break
-        settled = settled.unionByName(new).transform(truncate_plan_lazy)
-        frontier = new
+    # -- forward: the shared multi-source level BFS with path counts ---------
+    # 2-hop blocks, as for the bcc/bridges forest (shallow web graphs)
+    settled = multi_source_bfs(
+        LinkGraph(graph.vertices, edges, graph.num_partitions),
+        roots,
+        max_rounds,
+        fused_rounds=2,
+        path_counts=True,
+    )
+    level = settled.agg(F.max("dist")).collect()[0][0] or 0
 
     # -- backward: dependency accumulation by decreasing level --------------
-    # deltas holds FINALIZED (root, vid, delta) rows for dist > current level
+    # each level reads only the level below's finalized (root, vid, delta)
+    # rows: one truncated leaf per level, unioned once after the loop
     spark = settled.sparkSession
-    deltas = spark.createDataFrame([], "root long, vid long, delta double")
+    below = spark.createDataFrame([], "root long, vid long, delta double")
+    parts = [below]
     for d in range(level - 1, 0, -1):
         nxt = (
             settled.where(F.col("dist") == d + 1)
-            .join(deltas, ["root", "vid"], "left")
+            .join(below, ["root", "vid"], "left")
             .select(
                 "root",
                 F.col("vid").alias("w"),
@@ -104,14 +93,19 @@ def _brandes_tables(
             )
         )
         cur = settled.where(F.col("dist") == d).select("root", "vid", "sigma")
-        lvl = cur.join(msgs, ["root", "vid"], "left").select(
-            "root",
-            "vid",
-            (F.coalesce("m", F.lit(0.0)) * F.col("sigma")).alias("delta"),
+        below = (
+            cur.join(msgs, ["root", "vid"], "left")
+            .select(
+                "root",
+                "vid",
+                (F.coalesce("m", F.lit(0.0)) * F.col("sigma")).alias("delta"),
+            )
+            .transform(truncate_plan)
         )
-        deltas = deltas.unionByName(lvl).transform(truncate_plan)
+        parts.append(below)
+    deltas = reduce(DataFrame.unionByName, parts)
 
-    return edges, settled, deltas, level
+    return edges, settled, deltas
 
 
 def betweenness_sampled(
@@ -122,7 +116,7 @@ def betweenness_sampled(
     ``roots`` is a (vid) DataFrame. Vertices unreached from every root get
     bc = 0. Deterministic: σ/δ are sums of doubles; callers round.
     """
-    edges, _settled, deltas, _level = _brandes_tables(graph, roots, max_rounds)
+    edges, _settled, deltas = _brandes_tables(graph, roots, max_rounds)
     bc = deltas.groupBy("vid").agg(F.sum("delta").alias("bc"))
     out = (
         graph.vertices.select("vid")
@@ -149,7 +143,7 @@ def edge_betweenness_sampled(
     are ONE extra join chain over the already-computed forward/backward
     pair tables, no additional supersteps. Every undirected edge appears
     (bc = 0 if no shortest path crosses it)."""
-    edges, settled, deltas, _level = _brandes_tables(graph, roots, max_rounds)
+    edges, settled, deltas = _brandes_tables(graph, roots, max_rounds)
     # (root, w, sigma_w, delta_w) for every settled non-root w; deepest
     # level's delta is 0 by construction (omitted from deltas)
     succ = (

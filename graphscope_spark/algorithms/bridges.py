@@ -7,8 +7,9 @@ undirected edge is a bridge iff it lies on no cycle.
 Spark shape (the classic distributed bridge test; DFS low-link is
 inherently sequential so the reference's FLASH variant also avoids it):
 
-1. **BFS spanning forest** — multi-root level-synchronous BFS from each
-   component's minimum vid (components via WCC), keeping the minimum-vid
+1. **BFS spanning forest** — `bcc._spanning_forest`: the shared
+   multi-root level BFS (`closeness.multi_source_bfs`) from each
+   component's minimum vid (components via WCC), with the minimum-vid
    parent per vertex. Non-tree edges are exactly the cycle-closers.
 2. **XOR covering** — give every non-tree edge a 60-bit hash; let
    ``val(v)`` = XOR of hashes of non-tree edges incident to v. A bottom-up
@@ -26,57 +27,24 @@ vertices cost a map-side combine, never an array build.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import truncate_plan, truncate_plan_lazy
+from graphscope_spark.algorithms.bcc import _spanning_forest
+from graphscope_spark.bsp import release_truncated, truncate_plan
 from graphscope_spark.datapipe.hashing import portable_hash60
 from graphscope_spark.graph import LinkGraph
 
 
 def bridges(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
     """(a, b) with a<b — the bridge edges of the undirected simple graph."""
-    from graphscope_spark.algorithms.wcc import wcc
-
-    sym = graph.undirected_edges(drop_self_loops=True).repartition(F.col("src")).persist()
-    sym.count()
+    forest, sym, depth = _spanning_forest(graph, max_rounds)
     und = sym.where(F.col("src") < F.col("dst")).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     )
-
-    # -- spanning forest: multi-root BFS, min-vid parent --------------------
-    comp = wcc(graph).state  # (vid, comp); comp = min vid of the component
-    settled = (
-        comp.where(F.col("vid") == F.col("comp"))
-        .select(
-            "vid",
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(None).cast("long").alias("parent"),
-        )
-        .transform(truncate_plan_lazy)
-    )
-    frontier = settled
-    depth = 0
-    while depth < max_rounds:
-        depth += 1
-        cand = (
-            frontier.join(sym, frontier["vid"] == sym["src"])
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min("src").alias("parent"))
-        )
-        new = (
-            cand.join(settled.select("vid"), "vid", "anti")
-            .select("vid", F.lit(depth).cast("long").alias("dist"), "parent")
-            .transform(truncate_plan_lazy)
-        )
-        if new.count() == 0:
-            depth -= 1
-            break
-        settled = settled.unionByName(new).transform(truncate_plan_lazy)
-        frontier = new
-
-    tree = settled.where(F.col("parent").isNotNull())
-    tree_canon = tree.select(
+    tree_canon = forest.where(F.col("parent").isNotNull()).select(
         F.least("parent", "vid").alias("a"), F.greatest("parent", "vid").alias("b")
     )
     nontree = und.join(tree_canon, ["a", "b"], "anti")
@@ -91,21 +59,22 @@ def bridges(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
     )
     val = ends.groupBy("vid").agg(F.expr("bit_xor(h)").alias("val"))
 
-    # bottom-up by level: sub(v) = val(v) XOR xor(sub(children))
+    # bottom-up by level: sub(v) = val(v) XOR xor(sub(children)); each level
+    # reads only the level below it, so one truncated leaf per level is kept
+    # and the leaves are unioned once after the loop
     levels = (
-        settled.join(val, "vid", "left")
+        forest.join(val, "vid", "left")
         .select("vid", "dist", "parent", F.coalesce("val", F.lit(0)).alias("val"))
         .transform(truncate_plan)
     )
     spark = graph.vertices.sparkSession
-    subs = spark.createDataFrame([], "vid long, dist long, parent long, sub long")
+    below = spark.createDataFrame([], "vid long, dist long, parent long, sub long")
+    subs = [below]
     for d in range(depth, 0, -1):
-        child_xor = (
-            subs.where(F.col("dist") == d + 1)
-            .groupBy(F.col("parent").alias("vid"))
-            .agg(F.expr("bit_xor(sub)").alias("cx"))
+        child_xor = below.groupBy(F.col("parent").alias("vid")).agg(
+            F.expr("bit_xor(sub)").alias("cx")
         )
-        lvl = (
+        below = (
             levels.where(F.col("dist") == d)
             .join(child_xor, "vid", "left")
             .select(
@@ -116,11 +85,14 @@ def bridges(graph: LinkGraph, max_rounds: int = 500) -> DataFrame:
                 .otherwise(F.col("val"))
                 .alias("sub"),
             )
+            .transform(truncate_plan)
         )
-        subs = subs.unionByName(lvl).transform(truncate_plan)
+        subs.append(below)
 
-    out = subs.where(F.col("sub") == 0).select(
+    out = reduce(DataFrame.unionByName, subs).where(F.col("sub") == 0).select(
         F.least("parent", "vid").alias("a"), F.greatest("parent", "vid").alias("b")
     )
+    release_truncated(levels)
+    release_truncated(forest)
     sym.unpersist()
     return out

@@ -26,20 +26,27 @@ from graphscope_spark.graph import LinkGraph
 
 
 def multi_source_bfs(
-    graph: LinkGraph, roots: DataFrame, max_rounds: int = 500, fused_rounds: int = 8
+    graph: LinkGraph, roots: DataFrame, max_rounds: int = 500, fused_rounds: int = 8,
+    path_counts: bool = False,
 ) -> DataFrame:
     """(root, vid, dist) for every vertex reachable from each root (directed).
-    ``roots`` is a (vid) DataFrame.
+    ``roots`` is a (vid) DataFrame. The library's one level-synchronous BFS
+    loop: the closeness family, the bridges/bcc forest
+    (`bcc._spanning_forest`) and the Brandes forward sweep all run on it.
+    ``path_counts=True`` adds ``sigma``, the number of shortest root→vid
+    paths (roots 1.0, each hop sums its predecessors'); meaningful only over
+    deduplicated edges.
 
     ``fused_rounds=k`` stacks k BFS hops into ONE Spark job (the
     `degeneracy_order`/`pagerank` block-fusion lever): inner hops only
     construct lazily-truncated plans — each hop's `new` frontier is
     plan-cut at construction (the stats-blowup guard is eagerness-free, see
     `bsp.truncate_plan`) but not yet materialized — and the stopping
-    condition is ONE `settled.count()` per block, which both materializes
-    the chained checkpoints and detects the fixpoint (count stops growing).
-    Hops past exhaustion have empty frontiers and append nothing, so
-    over-running a block is semantically free.
+    condition is ONE ``max(dist)`` aggregate per block, which both
+    materializes the chained checkpoints and detects exhaustion (deepest
+    level below the block's last hop). Hops past exhaustion have empty
+    frontiers and append nothing, so over-running a block is semantically
+    free.
 
     The settled distance table is re-checkpointed once per BLOCK, not per
     hop — on a (root, vid) pair-state whose size is O(V·reach) the per-hop
@@ -54,11 +61,11 @@ def multi_source_bfs(
         .persist()
     )
     edges.count()
+    sigma = [F.lit(1.0).alias("sigma")] if path_counts else []
     settled = roots.select(
-        F.col("vid").alias("root"), F.col("vid"), F.lit(0).cast("long").alias("dist")
+        F.col("vid").alias("root"), "vid", F.lit(0).cast("long").alias("dist"), *sigma
     ).transform(truncate_plan_lazy)
     frontier = settled
-    n_settled = settled.count()
     k = max(1, int(fused_rounds))
     rnd = 0
     spent: list[DataFrame] = []
@@ -67,23 +74,26 @@ def multi_source_bfs(
         block_frames: list[DataFrame] = []
         for _ in range(min(k, max_rounds - rnd)):
             rnd += 1
-            cand = (
-                frontier.join(edges, frontier["vid"] == edges["src"])
-                .select(
-                    "root", F.col("dst").alias("vid"), (F.col("dist") + 1).alias("dist")
-                )
-                .groupBy("root", "vid")
-                .agg(F.min("dist").alias("dist"))
+            hop = frontier.join(edges, frontier["vid"] == edges["src"]).groupBy(
+                "root", F.col("dst").alias("vid")
             )
+            if path_counts:
+                cand = hop.agg(F.sum("sigma").alias("sigma")).select(
+                    "root", "vid", F.lit(rnd).cast("long").alias("dist"), "sigma"
+                )
+            else:
+                cand = hop.agg((F.min("dist") + 1).alias("dist"))
             new = cand.join(settled.select("root", "vid"), ["root", "vid"], "anti")
             new = new.transform(truncate_plan_lazy)
             block_frames.append(new)
             settled = settled.unionByName(new)
             frontier = new
         # ONE action per block: materializes every chained lazy checkpoint
-        # in the block AND yields the stopping condition.
+        # in the block AND yields the stopping condition — the BFS is
+        # exhausted once a hop of this block settled nothing new, i.e. the
+        # deepest settled level is below the block's last hop.
         settled = settled.transform(truncate_plan_lazy)
-        n_now = settled.count()
+        deepest = settled.agg(F.max("dist")).collect()[0][0]
         # Superseded leaves, releasable now that this block materialized:
         # the PREVIOUS block's frontier leaves (this block's plans were
         # their last consumers) and this block's input settled checkpoint
@@ -93,9 +103,8 @@ def multi_source_bfs(
             release_truncated(df)
         release_truncated(settled_leaf)
         spent = block_frames
-        if n_now == n_settled:
+        if deepest is None or deepest < rnd:
             break
-        n_settled = n_now
     for df in spent:
         release_truncated(df)
     edges.unpersist()

@@ -26,6 +26,7 @@ from __future__ import annotations
 import gc
 import json
 import os
+import re
 import shutil
 import time
 import urllib.request
@@ -207,6 +208,18 @@ class SparkStageMetrics:
 # --- checkpoint manifest --------------------------------------------------------
 
 
+def _require_local_dir(ckpt_dir: str | None) -> None:
+    """Refuse a ``scheme://`` checkpoint directory: manifests and promotion
+    use local file APIs, so on e.g. HDFS a resume would silently restart
+    from round 0 and a save would fail after writing its parquet state."""
+    m = re.match(r"([A-Za-z][A-Za-z0-9+.-]*)://", ckpt_dir or "")
+    if m:
+        raise ValueError(
+            f"checkpoint_dir {ckpt_dir!r}: the {m.group(1)}:// scheme is not "
+            "supported; checkpoints need a local (or NFS-mounted) path"
+        )
+
+
 def _manifest_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, "MANIFEST.json")
 
@@ -244,6 +257,7 @@ def save_checkpoint(
 
 def load_checkpoint(spark: SparkSession, ckpt_dir: str) -> tuple[DataFrame, int, dict] | None:
     """Resume point, or None if no checkpoint exists."""
+    _require_local_dir(ckpt_dir)
     mp = _manifest_path(ckpt_dir)
     if not os.path.exists(mp):
         return None
@@ -349,6 +363,7 @@ def run_bsp(
     """
     spark = state.sparkSession
     start_round = 0
+    _require_local_dir(checkpoint_dir)
     if resume and checkpoint_dir:
         loaded = load_checkpoint(spark, checkpoint_dir)
         if loaded is not None:

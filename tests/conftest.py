@@ -42,6 +42,16 @@ TINY_EDGES = [
 ]
 TINY_VERTICES = {1, 2, 3, 4, 5, 6, 7, 8, 10, 11, 12}
 
+# A graph deeper than two fused 8-hop BFS blocks: triangle 1-2-3, a 20-edge
+# tail 3-4-…-23, then the square 23-24-26-25 (two shortest paths to 26, and
+# the 23-24 edge in both directions). BFS depth from vertex 1 is 23.
+DEEP_EDGES = (
+    [(1, 2), (2, 3), (3, 1)]
+    + [(v, v + 1) for v in range(3, 23)]
+    + [(23, 24), (24, 23), (23, 25), (24, 26), (25, 26)]
+)
+DEEP_VERTICES = set(range(1, 27))
+
 
 @pytest.fixture(scope="session")
 def tiny_graph(spark):

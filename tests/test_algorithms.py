@@ -89,6 +89,17 @@ def test_pagerank_resume_refuses_other_alpha(tiny_graph, tmp_path):
                  checkpoint_dir=ck, resume=True)
 
 
+def test_pagerank_refuses_remote_checkpoint_dir(tiny_graph):
+    # checkpoint I/O is local-filesystem only: a scheme:// directory must be
+    # refused up front, not silently resumed from round 0
+    with pytest.raises(ValueError, match="hdfs:// scheme is not supported"):
+        pagerank(tiny_graph, tol=0.0, max_rounds=3,
+                 checkpoint_dir="hdfs://nowhere/ck", resume=True)
+    with pytest.raises(ValueError, match="hdfs:// scheme is not supported"):
+        pagerank(tiny_graph, tol=0.0, max_rounds=3,
+                 checkpoint_dir="hdfs://nowhere/ck", checkpoint_every=1)
+
+
 def test_wcc_tiny(tiny_graph):
     res = wcc(tiny_graph)
     got = _collect_map(res.state, "vid", "comp")

@@ -8,7 +8,7 @@ from collections import defaultdict
 
 from graphscope_spark.algorithms.bcc import bcc, cut_points
 from graphscope_spark.graph import from_edge_df
-from tests.conftest import TINY_EDGES, TINY_VERTICES
+from tests.conftest import DEEP_EDGES, DEEP_VERTICES, TINY_EDGES, TINY_VERTICES
 
 
 def _adj(edges):
@@ -104,12 +104,15 @@ def test_bcc_on_theta_and_diamond(spark):
         (5, 6), (6, 7), (7, 5), (5, 8), (8, 7),   # theta on 5,6,7,8: one block
         (8, 9),                                   # pendant bridge
     ]
-    verts = set(range(1, 10))
-    g = from_edge_df(spark.createDataFrame(edges, "src long, dst long"), num_partitions=4)
-    exp_blocks, exp_cuts = _python_blocks(edges, verts)
-    rows = bcc(g).collect()
-    got = defaultdict(set)
-    for r in rows:
-        got[r["block"]].add((r["a"], r["b"]))
-    assert set(map(frozenset, got.values())) == set(exp_blocks)
-    assert {r["vid"] for r in cut_points(g).collect()} == exp_cuts
+    # plus a graph deeper than two fused BFS blocks
+    for edges, verts in [(edges, set(range(1, 10))), (DEEP_EDGES, DEEP_VERTICES)]:
+        g = from_edge_df(
+            spark.createDataFrame(edges, "src long, dst long"), num_partitions=4
+        )
+        exp_blocks, exp_cuts = _python_blocks(edges, verts)
+        rows = bcc(g).collect()
+        got = defaultdict(set)
+        for r in rows:
+            got[r["block"]].add((r["a"], r["b"]))
+        assert set(map(frozenset, got.values())) == set(exp_blocks)
+        assert {r["vid"] for r in cut_points(g).collect()} == exp_cuts

@@ -8,7 +8,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from graphscope_spark.algorithms.betweenness import betweenness_sampled
-from tests.conftest import TINY_EDGES, TINY_VERTICES
+from graphscope_spark.graph import from_edge_df
+from tests.conftest import DEEP_EDGES, DEEP_VERTICES, TINY_EDGES, TINY_VERTICES
 
 
 def _python_brandes(edges, vertices, roots):
@@ -63,6 +64,14 @@ def test_betweenness_sampled_roots(spark, tiny_graph):
         r["vid"]: r["bc"] for r in betweenness_sampled(tiny_graph, roots).collect()
     }
     want = _python_brandes(TINY_EDGES, TINY_VERTICES, [1, 10])
+    for v in want:
+        assert np.isclose(got[v], want[v], atol=1e-9), (v, got[v], want[v])
+    # deeper than two fused BFS blocks, with a two-path square at depth 23
+    deep = from_edge_df(spark.createDataFrame(DEEP_EDGES, "src long, dst long"), 4)
+    roots = spark.createDataFrame([(1,), (26,)], "vid long")
+    got = {r["vid"]: r["bc"] for r in betweenness_sampled(deep, roots).collect()}
+    want = _python_brandes(DEEP_EDGES, DEEP_VERTICES, [1, 26])
+    assert set(got) == set(want)
     for v in want:
         assert np.isclose(got[v], want[v], atol=1e-9), (v, got[v], want[v])
 

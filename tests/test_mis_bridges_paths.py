@@ -8,7 +8,7 @@ from graphscope_spark.algorithms.bridges import bridges
 from graphscope_spark.algorithms.mis import maximal_independent_set
 from graphscope_spark.algorithms.paths import all_simple_paths
 from graphscope_spark.graph import from_edge_df
-from tests.conftest import TINY_EDGES, TINY_VERTICES
+from tests.conftest import DEEP_EDGES, DEEP_VERTICES, TINY_EDGES, TINY_VERTICES
 
 
 def _adj(edges):
@@ -54,12 +54,14 @@ def test_bridges_matches_python(tiny_graph):
 
 
 def test_bridges_cycle_plus_tail(spark):
-    from pyspark.sql import functions as F  # noqa: F401
-
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
     g = from_edge_df(spark.createDataFrame(edges, "src long, dst long"), 4)
     got = {(r["a"], r["b"]) for r in bridges(g).collect()}
     assert got == {(3, 4), (4, 5)}
+    # deeper than two fused BFS blocks
+    g = from_edge_df(spark.createDataFrame(DEEP_EDGES, "src long, dst long"), 4)
+    got = {(r["a"], r["b"]) for r in bridges(g).collect()}
+    assert got == _python_bridges(DEEP_EDGES, DEEP_VERTICES)
 
 
 def _python_simple_paths(edges, source, target, cutoff):

@@ -195,11 +195,12 @@ directly (tools/check_gate timings + controlled warm-process A/Bs):
   in memory; at cluster scale the distributed loop is the only path and
   its per-round work is frontier-sized.
 * **bcc** (12.6 s in BENCH_r04's suite at sf0.1) — three chained
-  iterative phases, each one-job-per-round: BFS forest (rounds = forest
-  depth), level-synchronous LCA climb of every non-tree edge (rounds =
-  forest depth; emits (non-tree, tree) cover pairs), then alternating
-  min-label propagation over the bipartite cover graph (rounds = cycle-
-  chain diameter). ~3x a single BSP kernel's round count is inherent to
+  iterative phases: BFS forest on the shared `multi_source_bfs` loop
+  (one job per fused 8-hop block; rounds = forest depth), level-
+  synchronous LCA climb of every non-tree edge (one job per round;
+  rounds = forest depth; emits (non-tree, tree) cover pairs, one truncated
+  leaf per round, unioned once), then alternating min-label propagation
+  over the bipartite cover graph (rounds = cycle-chain diameter). ~3x a single BSP kernel's round count is inherent to
   the block-decomposition semantics, not a plan defect: every round is a
   keyed join + partial-aggregated min with the same truncate-fusion as
   wcc, and the emitted cover volume (O(m*depth), depth O(log n) on web

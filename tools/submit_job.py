@@ -2,14 +2,17 @@
 
 The north-rule deployment shape — the whole pipeline as one submittable job:
 
-    python tools/make_pyfiles_zip.py                       # → graphscope_spark.zip
+    python tools/make_pyfiles_zip.py       # build output → graphscope_spark.zip
     spark-submit --master <cluster> \
         --py-files graphscope_spark.zip \
         tools/submit_job.py \
         --pages hdfs://…/pages.parquet \
         --algorithm pagerank --partitions 2048 \
-        --checkpoint-dir hdfs://…/ck --resume \
+        --checkpoint-dir /mnt/nfs/ck --resume \
         --output hdfs://…/ranks.parquet
+
+``--checkpoint-dir`` must be a local or NFS-mounted path; a ``scheme://``
+directory is refused (checkpoint manifests use local file APIs).
 
 ``--pages`` is a parquet table of the input-hint shape
 (url, warc_ts, html, text, lang); ``--synthesize N`` generates the
